@@ -261,17 +261,12 @@ object Profile {
         spark.sharedState.cacheManager.clearCache()
         tstage("total")(SparkEntry.queries("q46_rfm_segment")(spark, d).count())
         spark.sharedState.cacheManager.clearCache()
-      case "--walk-stages" =>
-        // per-stage cost split of BOTH graph-walk ops (round 18 — the
-        // finer probe superseding round 17's adaptive-only split; see
-        // Similarity.walkStageProbe: noop-sink timings for store/
-        // assignment, kNN graph checkpoint, entry lookup, the greedy
-        // descent loop, and the emit sort)
-        operators.Similarity.walkStageProbe(spark, d)
       case "--ann-occupancy" =>
-        // fine-list occupancy census of the adaptive quantizer — the
-        // scale driver of ann_graph_walk_adaptive's within-list build
-        // (Σ|list|² cosines) and the direct measure of the round-16
+        // fine-list occupancy census of the adaptive quantizer — max
+        // occupancy is ann_graph_walk_adaptive's per-task list size
+        // (one task holds one list and scans it once per visited
+        // node), Σ|list|² the corpus-wide bound on those neighbor
+        // scans — and the direct measure of the round-16
         // make_scale duplication artifact: bit-identical scaled copies
         // collapsed 12.5k fine lists to base-count cells of occupancy
         // = copies (Σ|list|² inflated ~6×); the signed-permutation

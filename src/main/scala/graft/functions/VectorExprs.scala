@@ -98,6 +98,23 @@ object VectorFunctions {
   def dotProduct(a: Column, b: Column): Column =
     Bridge.column(DotProduct(Bridge.expression(a), Bridge.expression(b)))
 
+  /** Plain-Scala replica of [[CosineSimilarity]]: the same left-to-right
+    * double accumulation, so it agrees with `graft_cosine` bit for bit.
+    * Driver- or task-side code that ranks by cosine (the small-corpus
+    * quantizer route, the list-local graph walk) uses it to tie-break
+    * exactly as the expression does.
+    */
+  def exactCosine(a: Array[Float], b: Array[Float]): Double = {
+    val n = math.min(a.length, b.length)
+    var dot = 0.0; var na = 0.0; var nb = 0.0; var i = 0
+    while (i < n) {
+      val x = a(i).toDouble; val y = b(i).toDouble
+      dot += x * y; na += x * x; nb += y * y; i += 1
+    }
+    val denom = math.sqrt(na) * math.sqrt(nb)
+    if (denom == 0.0) 0.0 else dot / denom
+  }
+
   /** Deterministic hashed bag-of-tokens embedding: tokens hash into
     * `dim` buckets (xxhash64 mod dim), the bucket-count vector is
     * L2-normalized and emitted as `array<float>` — the classic

@@ -450,7 +450,7 @@ object Dedup {
       // materialization job each, every round. Both stay node-bounded
       // reads of flagged's cached blocks. Round 18: the removal-
       // emptiness probe rides the SAME checkpoint job as an observed
-      // metric (the greedyWalk Observation pattern) — one driver
+      // metric (the CC-star Observation pattern) — one driver
       // action per round, not two.
       val nRemovedObs = new org.apache.spark.sql.Observation()
       val flagged = remaining.join(liveDeg, Seq("doc_id"), "left")

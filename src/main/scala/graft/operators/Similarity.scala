@@ -1,9 +1,9 @@
 package graft.operators
 
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, Row, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.expressions.Window
-import graft.functions.VectorFunctions.{cosineSim, dotProduct}
+import graft.functions.VectorFunctions.{cosineSim, dotProduct, exactCosine}
 import graft.sources.Tables
 
 /** §2.D — similarity search over the embedding column.
@@ -584,7 +584,7 @@ object Similarity {
       if (k <= literalRouteK)
         emb.select(col("vec_id"), col("embedding"))
           .limit(literalRouteMaxN + 1).collect()
-          .map(r => (r.getLong(0), r.getSeq[Float](1)))
+          .map(r => (r.getLong(0), r.getSeq[Float](1).toArray))
           .sortBy(_._1).toSeq
       else Seq.empty
     if (literalRows.nonEmpty && literalRows.size <= literalRouteMaxN)
@@ -602,21 +602,6 @@ object Similarity {
   private[graft] val literalRouteK = 64
   private[graft] val literalRouteMaxN = 8192
 
-  /** Exact double replica of [[graft.functions.CosineSimilarity]]'s
-    * recurrence (same accumulation order) — the driver-side centroid
-    * grouping must tie-break identically to the executor expression.
-    */
-  private def exactCos(a: Seq[Float], b: Seq[Float]): Double = {
-    val n = math.min(a.length, b.length)
-    var dot = 0.0; var na = 0.0; var nb = 0.0; var i = 0
-    while (i < n) {
-      val x = a(i).toDouble; val y = b(i).toDouble
-      dot += x * y; na += x * x; nb += y * y; i += 1
-    }
-    val denom = math.sqrt(na) * math.sqrt(nb)
-    if (denom == 0.0) 0.0 else dot / denom
-  }
-
   /** The driver-computed small-corpus form: every corpus vector's
     * per-level greedy assignment is computed ONCE on the driver (n ≤
     * 8192 × ~3·k^(1/3) exact-replica cosines — microseconds) and
@@ -633,24 +618,24 @@ object Similarity {
     * than silently dropping or mis-assigning.
     */
   private def threeLevelLiteral(s: SparkSession,
-      rows: Seq[(Long, Seq[Float])], k: Int, kc: Int, km: Int)
+      rows: Seq[(Long, Array[Float])], k: Int, kc: Int, km: Int)
       : (DataFrame, (DataFrame, String, String) => DataFrame,
          (DataFrame, String, String) => DataFrame) = {
     import s.implicits._
     val cents = rows.take(k)
     val coarse = cents.take(kc)
     val mids = cents.take(km)
-    def bestOf(cands: Seq[(Long, Seq[Float])], v: Seq[Float]): Long =
-      cands.maxBy { case (id, c) => (exactCos(v, c), -id) }._1
+    def bestOf(cands: Seq[(Long, Array[Float])], v: Array[Float]): Long =
+      cands.maxBy { case (id, c) => (exactCosine(v, c), -id) }._1
     val midCoarse: Map[Long, Long] =
       mids.map { case (id, v) => id -> bestOf(coarse, v) }.toMap
-    val midsByCoarse: Map[Long, Seq[(Long, Seq[Float])]] =
+    val midsByCoarse: Map[Long, Seq[(Long, Array[Float])]] =
       mids.groupBy(m => midCoarse(m._1)).map { case (p, g) => p -> g.sortBy(_._1) }
-    val fineMid: Seq[(Long, Seq[Float], Long)] = cents.map { case (id, v) =>
+    val fineMid: Seq[(Long, Array[Float], Long)] = cents.map { case (id, v) =>
       val c = bestOf(coarse, v)
       (id, v, bestOf(midsByCoarse(c), v))
     }
-    val finesByMid: Map[Long, Seq[(Long, Seq[Float])]] =
+    val finesByMid: Map[Long, Seq[(Long, Array[Float])]] =
       fineMid.groupBy(_._3)
         .map { case (p, g) => p -> g.sortBy(_._1).map(f => (f._1, f._2)) }
     // the full-corpus assignment, driver-computed with the same greedy
@@ -762,8 +747,7 @@ object Similarity {
 
   /** The per-query nprobe-best fine lists WITHIN the query's mid cell
     * (per-level greedy — IVF semantics), off a `toMid`-assigned query
-    * frame. Shared by the adaptive probe kernel (nprobe=4) and the
-    * adaptive walk's entry choice (nprobe=1).
+    * frame — the adaptive probe kernel's candidate lists (nprobe=4).
     */
   private def fineProbes(midQueries: DataFrame, fine: DataFrame,
       nprobe: Int): DataFrame = {
@@ -1145,20 +1129,6 @@ object Similarity {
       .orderBy(col("query_id"), col("rank"))
   }
 
-  /** Walk hop cap: sims strictly increase hop-over-hop so the walk
-    * always terminates; the cap only bounds the DataFrame loop and a
-    * breach FAILS LOUDLY instead of dumping a non-converged walk
-    * (which the oracle's termination check would poison anyway).
-    * TUNABLE via SPARK_GRAFT_WALK_MAX_HOPS (round-15 advice): walks
-    * are confined to one IVF list whose occupancy grows with corpus
-    * size under the FIXED-k anchor (n/16 at 100×), so a legitimate
-    * strictly-improving walk longer than the default is plausible at
-    * scale — a scale run raises the knob, no code change (the
-    * maxCompEdges convention). Default untouched.
-    */
-  private[graft] val walkMaxHops: Int =
-    sys.env.get("SPARK_GRAFT_WALK_MAX_HOPS").flatMap(_.toIntOption)
-      .filter(_ > 0).getOrElse(32)
   private[graft] val walkDegree = 8
 
   /** GRAPH-ANN GREEDY WALK (round 15 — HNSW-lite, the §9 item gated on
@@ -1189,200 +1159,136 @@ object Similarity {
     * checks pin the UNIQUE greedy walk — the oracle re-derives the
     * graph and entry from the raw embeddings (first-16 fixed
     * centroids, the ann_ivf convention) and validates the one path
-    * that can exist, no recursion needed. Spark's iterative loop is
-    * H bounded joins (all queries advance in lock-step rounds); at
-    * 100 TB the graph build is list-bounded and the walk is
-    * queries × degree cosines per round.
+    * that can exist, no recursion needed. Spark runs every walk
+    * inside the task that holds its list ([[listLocalWalk]]) over the
+    * persisted cent_id assignment; the whole op is one lazy plan with
+    * no per-hop driver job.
     */
   val annGraphWalk: Q = (s, d) => {
-    val emb = Tables.embeddings(s, d)
-    val centroids = fixedCentroids(s, d)
-    // the persisted cent_id-bucketed assignment (round-15 review): the
-    // graph self-join and entry lookup read the same store the other
-    // fixed-k ANN consumers use — co-located on cent_id, no per-run
-    // n×16 argmax recompute, no full-corpus checkpoint copy
     val assigned = assignedStore(s, d)
-    val pairSims = assigned.as("a").join(assigned.as("b"),
-        col("a.cent_id") === col("b.cent_id") &&
-          col("a.vec_id") =!= col("b.vec_id"))
-      .select(col("a.vec_id").as("src"), col("b.vec_id").as("dst"),
-        cosineSim(col("a.embedding"), col("b.embedding")).as("g_sim"))
-    val graph = graft.plans.TopK.perKey(pairSims,
-        Seq("src"), "g_sim", "dst", walkDegree)
-      .select(col("src"), col("dst")).localCheckpoint()
-    val queriesDf = emb.filter(col("vec_id") % 101 === 0)
-      .select(col("vec_id").as("query_id"), col("embedding").as("q_emb"))
-    val entry = probesOf(queriesDf, centroids, nprobe = 1)
-      .join(assigned.select(col("cent_id"), col("vec_id")), Seq("cent_id"))
-      .filter(col("vec_id") =!= col("query_id"))
-      .groupBy(col("query_id")).agg(min(col("vec_id")).as("node"))
-    greedyWalk(graph, queriesDf, entry,
-      assigned.select(col("vec_id"), col("embedding")))
+    listLocalWalk(assigned, walkProbes(assigned))
   }
 
-  /** The greedy descent loop shared by [[annGraphWalk]] and
-    * [[annGraphWalkAdaptive]]: all queries advance in lock-step join
-    * rounds — candidates = current node's graph neighbors (never the
-    * query itself), argmax by (sim DESC, id ASC) through the bounded-
-    * heap TopK, move only on STRICT improvement, stop at the local
-    * maximum. Emits the full path (query_id, step, node, q4 sim).
-    *
-    * ROUND 18 (the r17 verdict's ask #4; --walk-stages measured the
-    * loop as ~⅔ of both ops' warm cost): each hop used to pay TWO
-    * driver-blocking actions — the localCheckpoint materialization
-    * plus a separate isEmpty probe. The emptiness test now rides the
-    * checkpoint job itself through an [[org.apache.spark.sql.Observation]]
-    * (a CollectMetrics count collected by the SAME action), so a hop
-    * is exactly ONE job and the per-hop driver round-trips halve —
-    * the walk's job count is 1 + hops, the semantic floor for a
-    * lock-step sequential descent.
+  /** The walk queries (the vec_id % 101 slice) with their entry list.
+    * A query's nearest list (nprobe=1: sim DESC, id ASC over the
+    * centroids, per level for the three-level quantizer) is the same
+    * argmax that assigned it as a corpus vector, so the probe side is
+    * the assignment's own query slice — no second probe pass over the
+    * centroids.
     */
-  private def greedyWalk(graph: DataFrame, queriesDf: DataFrame,
-      entry: DataFrame, vecs: DataFrame): DataFrame = {
-    var live = entry.join(queriesDf, Seq("query_id"))
-      .join(vecs, col("node") === col("vec_id"))
-      .select(col("query_id"), col("q_emb"), col("node"),
-        cosineSim(col("q_emb"), col("embedding")).as("sim"),
-        lit(0L).as("step"))
-      .localCheckpoint()
-    val path = scala.collection.mutable.ListBuffer[DataFrame](
-      live.select(col("query_id"), col("step"), col("node"), col("sim")))
-    var hops = 0
-    var done = false
-    while (!done) {
-      val cand = live.join(graph, col("node") === col("src"))
-        .filter(col("dst") =!= col("query_id"))
-        .join(vecs.select(col("vec_id").as("dst"), col("embedding").as("d_emb")),
-          Seq("dst"))
-        .select(col("query_id"), col("q_emb"), col("sim"), col("step"),
-          col("dst"), cosineSim(col("q_emb"), col("d_emb")).as("nsim"))
-      val best = graft.plans.TopK.perKey(cand,
-        Seq("query_id"), "nsim", "dst", 1)
-      val movedCount = new org.apache.spark.sql.Observation()
-      val moved = best.filter(col("nsim") > col("sim"))
-        .select(col("query_id"), col("q_emb"), col("dst").as("node"),
-          col("nsim").as("sim"), (col("step") + 1).as("step"))
-        .observe(movedCount, count(lit(1)).as("n"))
-        .localCheckpoint()
-      if (movedCount.get("n").asInstanceOf[Long] == 0L) done = true
-      else {
-        hops += 1
-        if (hops > walkMaxHops)
-          sys.error(s"greedy walk did not converge within $walkMaxHops hops")
-        path += moved.select(col("query_id"), col("step"), col("node"), col("sim"))
-        live = moved
+  private def walkProbes(assigned: DataFrame): DataFrame =
+    assigned.filter(col("vec_id") % 101 === 0)
+      .select(col("vec_id").as("query_id"), col("embedding").as("q_emb"), col("cent_id"))
+
+  /** The greedy walk kernel shared by [[annGraphWalk]] and
+    * [[annGraphWalkAdaptive]]. `members` is (vec_id, embedding,
+    * cent_id), the list assignment; `probes` is (query_id, q_emb,
+    * cent_id), each query's entry list. Every kNN-graph edge joins two
+    * members of one list and the entry is a member of the probed
+    * list, so a walk never leaves its list: grouping both sides by
+    * cent_id (one row per list, members and probes each collected
+    * once) lets one task run every walk of that list to convergence,
+    * where a lock-step DataFrame descent paid one driver job per hop.
+    *
+    * Per list: entry = the lowest member id other than the query; a
+    * node's [[walkDegree]] graph neighbors (cos DESC, id ASC over the
+    * other members — the query included, as in the oracle's graph)
+    * are computed only when a walk visits the node and memoized for
+    * the list's other walks; a hop goes to the best neighbor other
+    * than the query (cos(q,·) DESC, id ASC) only on STRICT
+    * improvement. Cosines use [[graft.functions.VectorFunctions.exactCosine]],
+    * which matches `graft_cosine` bit for bit, so ties and q4 sims are
+    * the expression's. A strictly improving walk visits each member
+    * at most once, so the hop count stays below the list size; the
+    * `require` on it can only fire on a kernel bug.
+    *
+    * Memory: a task holds one whole list at a time (members'
+    * embeddings plus the memoized neighbor ids) — the same per-task
+    * bound the within-list cent_id self-join of a kNN-graph build
+    * imposes, since that join buffers a list's rows per key. Emits
+    * (query_id, step, node, q4 sim) ordered by (query_id, step).
+    */
+  private[graft] def listLocalWalk(members: DataFrame, probes: DataFrame): DataFrame = {
+    val s = members.sparkSession
+    import s.implicits._
+    val degree = walkDegree
+    val lists = members.groupBy(col("cent_id"))
+      .agg(collect_list(struct(col("vec_id"), col("embedding"))).as("members"))
+    val asks = probes.groupBy(col("cent_id"))
+      .agg(collect_list(struct(col("query_id"), col("q_emb"))).as("probes"))
+    // joined row: (cent_id, members, probes)
+    lists.join(asks, "cent_id").flatMap { r =>
+      val ms = r.getSeq[Row](1)
+        .map(m => (m.getLong(0), m.getSeq[Float](1).toArray)).sortBy(_._1)
+      val ids = ms.map(_._1).toArray
+      val vs = ms.map(_._2).toArray
+      val n = ids.length
+      // a before b in (sim DESC, id ASC)
+      def ahead(sa: Double, a: Int, sb: Double, b: Int): Boolean =
+        sa > sb || (sa == sb && ids(a) < ids(b))
+      val nbrMemo = new Array[Array[Int]](n)
+      def neighbors(i: Int): Array[Int] = {
+        if (nbrMemo(i) == null) {
+          val sim = vs.map(exactCosine(vs(i), _))
+          nbrMemo(i) = (0 until n).filter(_ != i)
+            .sortWith((a, b) => ahead(sim(a), a, sim(b), b)).take(degree).toArray
+        }
+        nbrMemo(i)
       }
-    }
-    path.reduce(_ unionByName _)
-      .select(col("query_id"), col("step"), col("node"),
-        q4(col("sim")).as("sim"))
+      r.getSeq[Row](2).flatMap { p =>
+        val q = p.getLong(0)
+        val qv = p.getSeq[Float](1).toArray
+        val entry = ids.indexWhere(_ != q)
+        if (entry < 0) Nil
+        else {
+          var cur = entry
+          var curSim = exactCosine(qv, vs(cur))
+          val path = scala.collection.mutable.ArrayBuffer((q, 0L, ids(cur), curSim))
+          var moving = true
+          while (moving) {
+            var best = -1; var bestSim = 0.0
+            neighbors(cur).foreach { j =>
+              if (ids(j) != q) {
+                val c = exactCosine(qv, vs(j))
+                if (best < 0 || ahead(c, j, bestSim, best)) { best = j; bestSim = c }
+              }
+            }
+            if (best >= 0 && bestSim > curSim) {
+              cur = best; curSim = bestSim
+              path += ((q, path.size.toLong, ids(cur), curSim))
+              require(path.size <= n, s"greedy walk of query $q made ${path.size - 1} " +
+                s"hops in a list of $n members — a strictly improving walk cannot")
+            } else moving = false
+          }
+          path
+        }
+      }
+    }.toDF("query_id", "step", "node", "sim")
+      .select(col("query_id"), col("step"), col("node"), q4(col("sim")).as("sim"))
       .orderBy(col("query_id"), col("step"))
   }
 
   /** ADAPTIVE-k GRAPH WALK (round 15 — the scale path for
     * [[annGraphWalk]]'s graph BUILD, closing the fixed-k caveat the
     * same way ann_incremental_adaptive closes ann_incremental's): the
-    * kNN graph's candidate generation runs within the corpus-sized
-    * THREE-LEVEL quantizer's FINE lists (annK(n) = n/64 lists,
-    * occupancy ~64 bounded as the corpus grows), so the within-list
-    * pairwise build is ~64·n cosines — LINEAR in corpus size — where
-    * the fixed-16-list build is n²/16, and the assignment itself is
-    * ~3n·k^(1/3) cosines (the r15 two-level form's 2n√k term was this
-    * op's measured 400× bottleneck). Entry = min-id member of the
-    * query's best fine list within its mid cell (the fineProbes shape
-    * at nprobe=1). Same greedy descent, same walk-certificate oracle
-    * (the adaptive CTE chain composed with the shared certificate
-    * tail). The fixed-k op stays registered as the oracle anchor.
+    * walk runs within the corpus-sized THREE-LEVEL quantizer's FINE
+    * lists (annK(n) = n/64 lists, occupancy ~64 bounded as the corpus
+    * grows), so a task holds ~64 vectors and a visited node's
+    * neighbor scan is ~64 cosines, where a fixed-16 list grows as
+    * n/16; the assignment itself is ~3n·k^(1/3) cosines (the r15
+    * two-level form's 2n√k term was this op's measured 400×
+    * bottleneck). Entry = min-id member of the query's best fine list
+    * within its mid cell — its own three-level assignment, see
+    * [[walkProbes]]. Same [[listLocalWalk]] kernel, same
+    * walk-certificate oracle (the
+    * adaptive CTE chain composed with the shared certificate tail).
+    * The fixed-k op stays registered as the oracle anchor.
     */
   val annGraphWalkAdaptive: Q = (s, d) => {
     val emb = Tables.embeddings(s, d)
-    val (fine, toMid, fineAssign) =
-      threeLevelParts(s, emb, annK(emb.count()))
-    val assigned = fineAssign(emb, "vec_id", "embedding").localCheckpoint()
-    val pairSims = assigned.as("a").join(assigned.as("b"),
-        col("a.cent_id") === col("b.cent_id") &&
-          col("a.vec_id") =!= col("b.vec_id"))
-      .select(col("a.vec_id").as("src"), col("b.vec_id").as("dst"),
-        cosineSim(col("a.embedding"), col("b.embedding")).as("g_sim"))
-    val graph = graft.plans.TopK.perKey(pairSims,
-        Seq("src"), "g_sim", "dst", walkDegree)
-      .select(col("src"), col("dst")).localCheckpoint()
-    val queriesDf = emb.filter(col("vec_id") % 101 === 0)
-      .select(col("vec_id").as("query_id"), col("embedding").as("q_emb"))
-    val entry = fineProbes(
-        toMid(queriesDf, "query_id", "q_emb"), fine, nprobe = 1)
-      .join(assigned.select(col("cent_id"), col("vec_id")), Seq("cent_id"))
-      .filter(col("vec_id") =!= col("query_id"))
-      .groupBy(col("query_id")).agg(min(col("vec_id")).as("node"))
-    greedyWalk(graph, queriesDf, entry,
-      assigned.select(col("vec_id"), col("embedding")))
-  }
-
-  /** Stage decomposition for the walk family (round 18, the r17
-    * verdict's ask #4; Profile --walk-stages): replicates
-    * [[annGraphWalk]] / [[annGraphWalkAdaptive]] stage by stage and
-    * times each with the noop sink (guide §1.4) — store/assignment,
-    * kNN graph build (checkpoint), entry lookup, the greedy descent
-    * loop (whose per-hop checkpoint+emptiness driver actions are the
-    * suspected fixed cost), and the final emit sort.
-    */
-  private[graft] def walkStageProbe(s: SparkSession, d: String): Unit = {
-    def time[A](label: String)(f: => A): A = {
-      val t0 = System.nanoTime(); val r = f
-      println(f"[profile] walk-stages $label%-26s ${(System.nanoTime() - t0) / 1e9}%6.2f s")
-      r
-    }
-    def noop(df: DataFrame): Unit =
-      df.write.format("noop").mode("overwrite").save()
-    val emb = Tables.embeddings(s, d)
-    // ---- fixed-k op, stage by stage (mirrors annGraphWalk) ----
-    val centroids = fixedCentroids(s, d)
-    val assigned = assignedStore(s, d)
-    time("fixed: store read")(noop(assigned))
-    val pairSims = assigned.as("a").join(assigned.as("b"),
-        col("a.cent_id") === col("b.cent_id") &&
-          col("a.vec_id") =!= col("b.vec_id"))
-      .select(col("a.vec_id").as("src"), col("b.vec_id").as("dst"),
-        cosineSim(col("a.embedding"), col("b.embedding")).as("g_sim"))
-    val graph = time("fixed: knn graph ckpt") {
-      graft.plans.TopK.perKey(pairSims, Seq("src"), "g_sim", "dst", walkDegree)
-        .select(col("src"), col("dst")).localCheckpoint()
-    }
-    val queriesDf = emb.filter(col("vec_id") % 101 === 0)
-      .select(col("vec_id").as("query_id"), col("embedding").as("q_emb"))
-    val entry = probesOf(queriesDf, centroids, nprobe = 1)
-      .join(assigned.select(col("cent_id"), col("vec_id")), Seq("cent_id"))
-      .filter(col("vec_id") =!= col("query_id"))
-      .groupBy(col("query_id")).agg(min(col("vec_id")).as("node"))
-    time("fixed: entry lookup")(noop(entry))
-    val walked = time("fixed: greedy loop")(
-      greedyWalk(graph, queriesDf, entry,
-        assigned.select(col("vec_id"), col("embedding"))))
-    time("fixed: emit sort")(noop(walked))
-    // ---- adaptive op, stage by stage (mirrors annGraphWalkAdaptive) ----
-    val (fine, toMid, fineAssign) = time("adaptive: quantizer parts")(
-      threeLevelParts(s, emb, annK(emb.count())))
-    val assigned2 = time("adaptive: assignment ckpt")(
-      fineAssign(emb, "vec_id", "embedding").localCheckpoint())
-    val pairSims2 = assigned2.as("a").join(assigned2.as("b"),
-        col("a.cent_id") === col("b.cent_id") &&
-          col("a.vec_id") =!= col("b.vec_id"))
-      .select(col("a.vec_id").as("src"), col("b.vec_id").as("dst"),
-        cosineSim(col("a.embedding"), col("b.embedding")).as("g_sim"))
-    val graph2 = time("adaptive: knn graph ckpt") {
-      graft.plans.TopK.perKey(pairSims2, Seq("src"), "g_sim", "dst", walkDegree)
-        .select(col("src"), col("dst")).localCheckpoint()
-    }
-    val entry2 = fineProbes(
-        toMid(queriesDf, "query_id", "q_emb"), fine, nprobe = 1)
-      .join(assigned2.select(col("cent_id"), col("vec_id")), Seq("cent_id"))
-      .filter(col("vec_id") =!= col("query_id"))
-      .groupBy(col("query_id")).agg(min(col("vec_id")).as("node"))
-    time("adaptive: entry lookup")(noop(entry2))
-    val walked2 = time("adaptive: greedy loop")(
-      greedyWalk(graph2, queriesDf, entry2,
-        assigned2.select(col("vec_id"), col("embedding"))))
-    time("adaptive: emit sort")(noop(walked2))
+    val (_, _, fineAssign) = threeLevelParts(s, emb, annK(emb.count()))
+    val assigned = fineAssign(emb, "vec_id", "embedding")
+    listLocalWalk(assigned, walkProbes(assigned))
   }
 
   val queries: Map[String, Q] = Map(

@@ -35,4 +35,27 @@ class VectorExprsSpec extends SparkTestBase {
       assert(r.getDouble(0) <= 1.0 + 1e-9 && r.getDouble(0) >= -1.0 - 1e-9)
     }
   }
+
+  test("exactCosine replicates graft_cosine bit for bit, zero vectors included") {
+    val sqlCtx = spark
+    import sqlCtx.implicits._
+    val rnd = new scala.util.Random(20261017L)
+    def vec(): Array[Float] = Array.fill(64)(rnd.nextGaussian().toFloat)
+    val zero = Array.fill(64)(0f)
+    val pairs: Seq[(Int, Array[Float], Array[Float])] =
+      (0 until 200).map(i => (i, vec(), vec())) ++
+        Seq((200, zero, vec()), (201, vec(), zero), (202, zero, zero))
+    val byId = pairs.map(p => p._1 -> p).toMap
+    val got = pairs.toDF("id", "a", "b")
+      .select(col("id"), cosineSim(col("a"), col("b")).as("c")).collect()
+    assert(got.length == pairs.size)
+    got.foreach { r =>
+      val (_, a, b) = byId(r.getInt(0))
+      val want = exactCosine(a, b)
+      assert(java.lang.Double.doubleToRawLongBits(r.getDouble(1)) ==
+        java.lang.Double.doubleToRawLongBits(want),
+        s"pair ${r.getInt(0)}: graft_cosine=${r.getDouble(1)} exactCosine=$want")
+    }
+    assert(exactCosine(zero, byId(0)._2) == 0.0)
+  }
 }
