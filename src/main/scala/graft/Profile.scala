@@ -16,7 +16,7 @@ object Profile {
       case "--containment-volume" =>
         // the dd_containment scale diagnostic: candidate volume is what
         // the 2%-df cap must keep bounded as the corpus grows
-        val nDocs = operators.Dedup.documentsCount(spark, d)
+        val nDocs = sources.Tables.documents(spark, d).count()
         // Persist the candidate stage so the verify timing below reuses
         // it through the CacheManager (dd_containment rebuilds the
         // identical candidate plan internally) — without the persist,
@@ -35,34 +35,10 @@ object Profile {
         println(f"[profile] containment-volume docs=$nDocs candidates=$cand " +
           f"(${(t1 - t0) / 1e9}%.2f s) verified=$verified (${(t2 - t1) / 1e9}%.2f s) " +
           f"cand_per_doc=${cand.toDouble / nDocs}%.2f")
-      case "--cc-compare" =>
-        // head-to-head of the two DISTRIBUTED CC algorithms on the same
-        // pair graph (driver fast path disabled): pointer-jumping
-        // fixpoint vs alternating large-star/small-star. Informs which
-        // one ddCluster's >threshold route should use at a given graph
-        // shape.
-        val pairs = operators.Dedup
-          .minhashPairs(spark, d).select(col("doc_a"), col("doc_b"))
-          .persist()
-        val nPairs = pairs.count()
-        val t0 = System.nanoTime()
-        val pj = operators.Dedup.connectedComponentsPointerJump(pairs)
-        val pjRows = pj.count()
-        val t1 = System.nanoTime()
-        val st = operators.Dedup.connectedComponentsStar(pairs)
-        val stRows = st.count()
-        val t2 = System.nanoTime()
-        val diff = pj.exceptAll(st).count() + st.exceptAll(pj).count()
-        pairs.unpersist()
-        println(f"[profile] cc-compare pairs=$nPairs " +
-          f"pointer_jump=${(t1 - t0) / 1e9}%.2f s ($pjRows nodes) " +
-          f"star=${(t2 - t1) / 1e9}%.2f s ($stRows nodes) label_diff=$diff")
       case "--cc-star" =>
         // star CC alone on the pair graph, with per-round edge
-        // telemetry — the 100×-scale measurement (pointer jumping is
-        // deliberately excluded: its non-contracting per-round shuffle
-        // is exactly why it loses at this size, and --cc-compare covers
-        // the head-to-head at sizes where both finish politely)
+        // telemetry — the 100×-scale measurement of the contraction that
+        // makes it the router's distributed branch
         val pairs = operators.Dedup
           .minhashPairs(spark, d).select(col("doc_a"), col("doc_b"))
           .persist()
@@ -178,43 +154,6 @@ object Profile {
           println(f"[profile] ingest-scale r$r files=$n " +
             f"${(System.nanoTime() - t0) / 1e9}%.2f s hash_exchanges=$nEx")
         }
-      case "--stream-flagship" =>
-        // per-batch cost of the streaming flagship (statementPipeline)
-        // as its maintained indexes GROW: <sfDir> is a statements root
-        // of dated folders (tools/gen_statements.py <dir> <n_dates>);
-        // the dates are applied in ~10 equal batch groups through the
-        // same foreachBatch body the stream runs. The claim under
-        // measurement: per-batch cost tracks the BATCH (probe work =
-        // batch×bands + batch×nprobe), not the accumulated corpus —
-        // a flat curve here is what makes the firehose consumable.
-        val dates = new java.io.File(d).list().filter(_.matches("[0-9]{8}")).sorted
-        require(dates.nonEmpty, s"no dated folders under $d")
-        val groups = dates.grouped(math.max(1, dates.length / 10)).toSeq
-        val ddTbl = "profile_flagship_band_index"
-        val annTbl = "profile_flagship_ivf_index"
-        Seq(ddTbl, annTbl).foreach(t => spark.sql(s"DROP TABLE IF EXISTS $t"))
-        val work = java.nio.file.Files.createTempDirectory("graft_flagship_prof").toString
-        val cents = operators.FundEtl
-          .loadStatements(spark, "*.txt", s"$d/${dates.head}")
-          .select(col("file_name"),
-            functions.VectorFunctions.hashedTextEmbedding(col("content"))
-              .as("embedding"))
-          .orderBy(col("file_name")).limit(16)
-          .collect().zipWithIndex
-          .map { case (r, i) => (i.toLong, r.getSeq[Float](1)) }.toSeq
-        groups.zipWithIndex.foreach { case (g, i) =>
-          val batch = operators.FundEtl.loadStatements(spark, "*.txt",
-            g.map(dt => s"$d/$dt"): _*)
-          val t0 = System.nanoTime()
-          streaming.EventStreams.statementPipelineApplyBatch(batch, i.toLong,
-            s"$work/extracted", ddTbl, s"$work/pairs", cents, annTbl,
-            s"$work/topk", 2, 3)
-          val secs = (System.nanoTime() - t0) / 1e9
-          val idxRows = spark.table(ddTbl).count() + spark.table(annTbl).count()
-          println(f"[profile] stream-flagship batch=$i dates=${g.length} " +
-            f"$secs%.2f s index_rows=$idxRows")
-        }
-        Seq(ddTbl, annTbl).foreach(t => spark.sql(s"DROP TABLE IF EXISTS $t"))
       case "--ann-k-sweep" =>
         // the adaptive-k bound, measured: with fixed k=16 every list
         // holds n/16 vectors, so the batch probe is ~n²/80 cosines and
@@ -452,96 +391,6 @@ object Profile {
             f"dist=$nDist (${(t1 - t0) / 1e9}%.2f s) " +
             f"driver=$nDrv (${(t3 - t2) / 1e9}%.2f s, heap $h0%d->$h1%d MB) " +
             f"score_diff=$diff")
-        }
-      case "--stmt-probe" =>
-        // end-to-end timing of one cold statement batch (exactly
-        // Bench.timeStatementBatch's construction: fresh tables + temp
-        // dirs per call so every run pays the full per-batch cost) —
-        // the A/B harness for changes to statementPipelineApplyBatch.
-        val fe = operators.FundEtl
-        val docs = fe.loadStatements(spark, fe.statementsDir)
-        val seedNames = docs.select(col("file_name"))
-          .orderBy(col("file_name")).limit(4).collect().map(_.getString(0)).toSeq
-        val cents: Seq[(Long, Seq[Float])] = docs
-          .filter(col("file_name").isin(seedNames: _*))
-          .select(org.apache.spark.sql.functions.xxhash64(col("file_name")).as("id"),
-            functions.VectorFunctions.hashedTextEmbedding(col("content"))
-              .as("embedding"))
-          .collect().map(r => (r.getLong(0), r.getSeq[Float](1))).sortBy(_._1).toSeq
-        val tmp = java.nio.file.Files.createTempDirectory("graft-stmt-probe").toString
-        val tag = java.lang.Long.toHexString(System.nanoTime())
-        val (ddTbl, annTbl) = (s"profile_probe_dd_$tag", s"profile_probe_ann_$tag")
-        try {
-          val t0 = System.nanoTime()
-          streaming.EventStreams.statementPipelineApplyBatch(
-            docs, 0L, s"$tmp/extracted", ddTbl, s"$tmp/pairs", cents,
-            annTbl, s"$tmp/topk", 2, 3)
-          println(f"[profile] stmt-probe ${(System.nanoTime() - t0) / 1e9}%.2f s")
-        } finally {
-          Seq(ddTbl, annTbl).foreach(t =>
-            try spark.sql(s"DROP TABLE IF EXISTS $t") catch { case _: Throwable => () })
-          try {
-            import scala.jdk.CollectionConverters._
-            val walk = java.nio.file.Files.walk(java.nio.file.Paths.get(tmp))
-            try walk.iterator().asScala.toSeq.reverse
-              .foreach(java.nio.file.Files.deleteIfExists(_))
-            finally walk.close()
-          } catch { case _: Throwable => () }
-        }
-      case "--stmt-stages" =>
-        // per-stage cost split of the statement flagship's batch probe
-        // (Bench.timeStatementBatch's construction, with the three
-        // stages of statementPipelineApplyBatch timed separately):
-        // extract checkpoint / manifest write / dedup-index batch /
-        // ann-index batch. Decides whether the stages are worth
-        // overlapping (guide §2.6) or one of them dominates.
-        val fe = operators.FundEtl
-        val docs = fe.loadStatements(spark, fe.statementsDir)
-        val seedNames = docs.select(col("file_name"))
-          .orderBy(col("file_name")).limit(4).collect().map(_.getString(0)).toSeq
-        val cents: Seq[(Long, Seq[Float])] = docs
-          .filter(col("file_name").isin(seedNames: _*))
-          .select(org.apache.spark.sql.functions.xxhash64(col("file_name")).as("id"),
-            functions.VectorFunctions.hashedTextEmbedding(col("content"))
-              .as("embedding"))
-          .collect().map(r => (r.getLong(0), r.getSeq[Float](1))).sortBy(_._1).toSeq
-        val tmp = java.nio.file.Files.createTempDirectory("graft-stmt-prof").toString
-        val tag = java.lang.Long.toHexString(System.nanoTime())
-        val (ddTbl, annTbl) = (s"profile_stmt_dd_$tag", s"profile_stmt_ann_$tag")
-        try {
-          var t0 = System.nanoTime()
-          val extracted = fe.extractStatementFields(spark,
-              fe.classifyStatements(spark, docs), extra = Seq("content"))
-            .withColumn("doc_id",
-              org.apache.spark.sql.functions.xxhash64(col("file_name")))
-            .localCheckpoint()
-          println(f"[profile] stmt-stages extract  ${(System.nanoTime() - t0) / 1e9}%.2f s")
-          t0 = System.nanoTime()
-          extracted.drop("content", "doc_id")
-            .write.mode("overwrite").parquet(s"$tmp/extracted/batch-0")
-          println(f"[profile] stmt-stages manifest ${(System.nanoTime() - t0) / 1e9}%.2f s")
-          t0 = System.nanoTime()
-          streaming.EventStreams.dedupIndexApplyBatch(
-            extracted.select(col("doc_id"), col("content").as("text")),
-            0L, ddTbl, s"$tmp/pairs")
-          println(f"[profile] stmt-stages dedup    ${(System.nanoTime() - t0) / 1e9}%.2f s")
-          t0 = System.nanoTime()
-          streaming.EventStreams.annIndexApplyBatch(
-            extracted.select(col("doc_id").as("vec_id"),
-              functions.VectorFunctions
-                .hashedTextEmbedding(col("content")).as("embedding")),
-            0L, cents, annTbl, s"$tmp/topk", 2, 3, 8)
-          println(f"[profile] stmt-stages ann      ${(System.nanoTime() - t0) / 1e9}%.2f s")
-        } finally {
-          Seq(ddTbl, annTbl).foreach(t =>
-            try spark.sql(s"DROP TABLE IF EXISTS $t") catch { case _: Throwable => () })
-          try {
-            import scala.jdk.CollectionConverters._
-            val walk = java.nio.file.Files.walk(java.nio.file.Paths.get(tmp))
-            try walk.iterator().asScala.toSeq.reverse
-              .foreach(java.nio.file.Files.deleteIfExists(_))
-            finally walk.close()
-          } catch { case _: Throwable => () }
         }
       case "--curation-stages" =>
         // per-batch cost split of tx_curation_incremental: the op is 3

@@ -5,6 +5,7 @@ import org.apache.spark.sql.functions._
 import org.apache.spark.sql.expressions.Window
 import graft.functions.VectorFunctions.cosineSim
 import graft.functions.HashFunctions.{intersectCount, minhashSig, simhash64}
+import graft.Stages
 import graft.sources.Tables
 
 /** §2.C — deduplication family for a training-data pipeline.
@@ -1638,14 +1639,13 @@ object Dedup {
     * graph size. Small graphs take the driver union-find fast path
     * (memory math below); larger graphs run alternating large-star/
     * small-star ([[connectedComponentsStar]]), which measured FASTER
-    * than the pointer-jumping fixpoint head-to-head (6.1 s vs 8.7 s on
-    * the 1.66M-edge 25×-corpus pair graph, labels identical) and
-    * converges in O(log² n) rounds INDEPENDENT OF DIAMETER — the
-    * property that holds at 100 TB, where a near-dup graph can hide
-    * million-hop chains. The pointer-jumping fixpoint remains as
-    * [[connectedComponentsPointerJump]] (spec-equal on chain / cycle /
-    * corpus graphs; head-to-head re-measurable via Profile
-    * --cc-compare).
+    * than a pointer-jumping label-propagation fixpoint head-to-head
+    * (6.1 s vs 8.7 s on the 1.66M-edge 25×-corpus pair graph, labels
+    * identical) and converges in O(log² n) rounds INDEPENDENT OF
+    * DIAMETER — the property that holds at 100 TB, where a near-dup
+    * graph can hide million-hop chains. Both branches are spec-equal
+    * to a plain union-find reference on chain / cycle / corpus graphs
+    * (OperatorsSpec).
     *
     * BUDGET (round 14 — the verdict's CC-floor experiment, measured
     * via Profile --cc-floor): raised 1M → 64M directed edges. On the
@@ -1716,92 +1716,10 @@ object Dedup {
     connectedComponentsStar(p)
   }
 
-  /** Min-label propagation with POINTER JUMPING — the classic
-    * alternative distributed CC fixpoint, kept first-class for
-    * cross-checking the star path (spec-equal on chain / cycle /
-    * corpus graphs) and for head-to-head measurement (Profile
-    * --cc-compare). Each round first lowers every node's label to the
-    * min over itself and its neighbors (one edge of travel), then
-    * rewrites label ← label(label) — label chains halve per round, so
-    * the fixpoint lands in O(log diameter) rounds rather than
-    * O(diameter). The jump join is safe because labels are monotone:
-    * label(n) ≤ n always, so label(label(n)) exists and is ≤ label(n)
-    * — both steps only ever lower labels, which also makes the label
-    * SUM a convergence certificate (unchanged sum ⇔ fixpoint; one
-    * cheap aggregate per round instead of a diff join). Every round is
-    * localCheckpoint'ed — the standard lineage truncation for
-    * iterative DataFrame algorithms (without it round-N optimization
-    * replays all prior rounds; measured 131s → 2s at sf0.1).
-    * Non-convergence within the cap FAILS LOUDLY instead of emitting
-    * wrong labels. Its per-round shuffle carries the FULL edge set
-    * every round — the reason the contracting star variant won the
-    * routing decision above.
-    */
-  private[graft] def connectedComponentsPointerJump(pairs: DataFrame): DataFrame = {
-    val edges = pairs
-      .unionAll(pairs.select(col("doc_b").as("doc_a"), col("doc_a").as("doc_b")))
-      .localCheckpoint()
-    var labels = edges.select(col("doc_a").as("node")).distinct()
-      .withColumn("label", col("node"))
-      .localCheckpoint()
-    // Decimal(38,0) sum: Spark's non-ANSI Long sum wraps on overflow, and
-    // a wrapped delta of exactly 2^64 would fake a fixpoint on graphs with
-    // huge id ranges. Decimal is overflow-proof at any node count.
-    def labelSum(df: DataFrame): java.math.BigDecimal =
-      df.agg(coalesce(sum(col("label").cast("decimal(38,0)")),
-        lit(0).cast("decimal(38,0)"))).head().getDecimal(0)
-    var prevSum = labelSum(labels)
-    // min over self ∪ neighbors — one edge of label travel
-    def hop(ls: DataFrame): DataFrame = edges
-      .join(ls, edges("doc_a") === ls("node"))
-      .select(col("doc_b").as("node"), col("label"))
-      .unionAll(ls)
-      .groupBy(col("node"))
-      .agg(min(col("label")).as("label"))
-    // pointer jump: label ← label(label); labels cover all nodes, so
-    // the self-join is total
-    def jump(ls: DataFrame): DataFrame = {
-      val parents = ls.select(col("node").as("p_node"), col("label").as("p_label"))
-      ls.join(parents, col("label") === col("p_node"))
-        .select(col("node"), col("p_label").as("label"))
-    }
-    var converged = false
-    var rounds = 0
-    // 2^40 hops of reach — enough for any graph whose node ids fit a
-    // long; hitting the cap means a logic bug, not a big graph
-    val maxRounds = 40
-    while (!converged && rounds < maxRounds) {
-      // Checkpoint the hop before jumping: jump self-joins its input, so
-      // an un-checkpointed hop subtree would sit on both sides of the
-      // jump join and per-round cost would hinge on exchange reuse.
-      val hopped = hop(labels).localCheckpoint()
-      val hopSum = labelSum(hopped)
-      if (hopSum.compareTo(prevSum) == 0) {
-        // hop-fixpoint IS the CC fixpoint (labels are monotone and for
-        // every edge (a,b) an unchanged sum forces label(a)=label(b)),
-        // so the final round skips the jump join entirely.
-        labels = hopped
-        converged = true
-      } else {
-        // an unchanged sum across jump alone is NOT a certificate
-        // (jump is label(label); hop could still lower) — only the
-        // hop-fixpoint test above terminates the loop.
-        val propagated = jump(hopped).localCheckpoint()
-        prevSum = labelSum(propagated)
-        labels = propagated
-      }
-      rounds += 1
-    }
-    if (!converged)
-      throw new IllegalStateException(
-        s"connectedComponentsPointerJump did not converge in $maxRounds rounds")
-    labels
-  }
-
   /** Connected components by ALTERNATING LARGE-STAR / SMALL-STAR
     * (Kiveris et al., "Connected Components in MapReduce and Beyond",
-    * SoCC'14) — the published 100 TB-scale CC algorithm. Where the
-    * pointer-jumping fixpoint above keeps the FULL edge set alive every
+    * SoCC'14) — the published 100 TB-scale CC algorithm. Where a
+    * label-propagation fixpoint keeps the FULL edge set alive every
     * round (its per-round shuffle never shrinks), each star operation
     * REWRITES the edge set toward stars rooted at component minima, so
     * the per-round data volume contracts as components collapse — the
@@ -1819,8 +1737,8 @@ object Dedup {
     * structurally each round (no child is a root AND no child has two
     * parents ⇔ stars ⇔ fixpoint, since L and S are identities on
     * stars). Emits the same (node, label=component-min) relation as
-    * [[connectedComponents]]; spec-asserted equal to union-find and to
-    * the pointer-jumping fixpoint on chain / cycle / corpus graphs.
+    * [[connectedComponents]]; spec-asserted equal to union-find on
+    * chain / cycle / corpus graphs.
     * Non-convergence inside the generous cap fails loudly.
     */
   private[graft] def connectedComponentsStar(pairs: DataFrame,
@@ -1974,31 +1892,6 @@ object Dedup {
       .orderBy(col("doc_id"))
   }
 
-  /** Near-CONTAINMENT detection — the asymmetric cousin of Jaccard
-    * near-dup: a short document quoted or copied inside a longer one
-    * has low Jaccard (the union is dominated by the container) but
-    * containment |A∩B| / |A| ≈ 1. The size-ratio blocking of
-    * dd_ngram_jaccard deliberately rejects exactly these pairs, and a
-    * raw shingle self-join is Σdf² — quadratic in shingle document
-    * frequency (measured 134s at 5× on this small-vocab corpus). So
-    * candidates come from PREFIX FILTERING, the production algorithm:
-    * each document probes with its 4 globally-RAREST shingles (by df,
-    * ties on the hash) against the df-capped shingle index. True
-    * containment A⊆B always collides — every shingle of A, including
-    * its rarest, is in B — and 90%-containment misses only if all 4
-    * rarest fall in the missing tail (≈0.1⁴). Join volume is
-    * Σ_probe df(rarest) — small by construction, since probes are the
-    * rare shingles. Only surviving candidates pay the exact
-    * intersect/verify against the full shingle sets.
-    */
-  /** The prefix-filter candidate stage of [[ddContainment]], exposed
-    * so the candidate-volume curve can be measured directly at larger
-    * scale factors (Profile --containment-volume): candidate count is
-    * the quantity the df cap must keep bounded as the corpus grows.
-    */
-  private[graft] def documentsCount(s: SparkSession, d: String): Long =
-    Tables.documents(s, d).count()
-
   /** The shingle frame the containment stages share — exposed so the
     * Profile stage-split diagnostic can manage the persist lifecycle
     * itself (the old one-arg wrapper either leaked its cached frame or,
@@ -2009,9 +1902,13 @@ object Dedup {
   private[graft] def containmentShingles(s: SparkSession, d: String): DataFrame =
     shingled(s, d).select(col("doc_id"), col("sh_hashes"))
 
-  /** Candidate stage over a CALLER-persisted shingle frame — ddContainment
-    * passes the same persisted frame it verifies against, so the shingle
-    * table is materialized (and held in memory) exactly once.
+  /** The prefix-filter candidate stage of [[ddContainment]], over a
+    * CALLER-persisted shingle frame — ddContainment passes the same
+    * frame it verifies against, so the shingle table is materialized
+    * (and held in memory) exactly once. Exposed so the candidate-volume
+    * curve can be measured directly at larger scale factors (Profile
+    * --containment-volume): candidate count is the quantity the df cap
+    * must keep bounded as the corpus grows.
     */
   private[graft] def containmentCandidates(
       s: SparkSession, d: String, sh: DataFrame): DataFrame = {
@@ -2055,6 +1952,23 @@ object Dedup {
         col("containment"))
       .orderBy(col("doc_a"), col("doc_b"))
 
+  /** Near-CONTAINMENT detection — the asymmetric cousin of Jaccard
+    * near-dup: a short document quoted or copied inside a longer one
+    * has low Jaccard (the union is dominated by the container) but
+    * containment |A∩B| / |A| ≈ 1. The size-ratio blocking of
+    * dd_ngram_jaccard deliberately rejects exactly these pairs, and a
+    * raw shingle self-join is Σdf² — quadratic in shingle document
+    * frequency (measured 134s at 5× on this small-vocab corpus). So
+    * candidates come from PREFIX FILTERING, the production algorithm:
+    * each document probes with its 4 globally-RAREST shingles (by df,
+    * ties on the hash) against the df-capped shingle index. True
+    * containment A⊆B always collides — every shingle of A, including
+    * its rarest, is in B — and 90%-containment misses only if all 4
+    * rarest fall in the missing tail (≈0.1⁴). Join volume is
+    * Σ_probe df(rarest) — small by construction, since probes are the
+    * rare shingles. Only surviving candidates pay the exact
+    * intersect/verify against the full shingle sets.
+    */
   val ddContainment: Q = (s, d) => {
     // the shingle store replaces the old session persist(): each of the
     // three reads below (df-index explode, fan-back a, fan-back b) is a
@@ -2146,34 +2060,22 @@ object Dedup {
     * `fund_data_etl.py` dedup-then-aggregate flow); this is the same
     * retain-one-then-route contract at corpus scale.
     */
-  val ddPipeline: Q = (s, d) => {
-    // OVERLAPPED INDEPENDENT JOBS (round 18, the r17 verdict's ask #2,
-    // guide §2.6): the pipeline's driver-blocking actions used to run
-    // strictly sequentially although three of its subtrees are
-    // mutually independent — (a) the quality corpus scan (needs only
-    // the documents table, not the dedup chain), (b) the CC labeling
-    // and (c) the authority power iteration (both ride the SAME
-    // checkpointed pair graph but never each other). A 3-thread pool
-    // submits them concurrently so each job's straggler tail is
-    // back-filled by the others' tasks; FIFO scheduling keeps the
-    // first-submitted job's resources first, which is exactly the
-    // back-fill shape the guide describes. Results are awaited before
-    // the (sequential) final join; any failure rethrows via
-    // Await.result. Job descriptions are thread-local, so the UI
-    // labels each overlapped job correctly.
-    import scala.concurrent.{Await, ExecutionContext, Future}
-    import scala.concurrent.duration.Duration
-    val pool = java.util.concurrent.Executors.newFixedThreadPool(3)
-    implicit val ec: ExecutionContext =
-      ExecutionContext.fromExecutorService(pool)
-    try {
+  val ddPipeline: Q = (s, d) => Stages.scope(s) { st =>
+    // OVERLAPPED INDEPENDENT JOBS: three of the pipeline's subtrees
+    // are mutually independent — (a) the quality corpus scan (needs
+    // only the documents table, not the dedup chain), (b) the CC
+    // labeling and (c) the authority power iteration (both ride the
+    // SAME checkpointed pair graph but never each other) — so each
+    // runs in its own fork and back-fills the others' straggler tails.
+    // The digest, keeper and pair-graph stages run on the calling
+    // thread between the quality fork and the other two. Results are
+    // joined before the (sequential) final join.
     val docs = Tables.documents(s, d)
     // quality is a full corpus TEXT scan at 100 TB — the single most
     // overlappable cost: fork it first, checkpoint so the work really
-    // happens inside the future (a lazy frame would defer it back
+    // happens inside the fork (a lazy frame would defer it back
     // into the sequential final join)
-    val qualityF = Future {
-      s.sparkContext.setJobDescription("dd_pipeline: quality scan (overlapped)")
+    val qualityF = st.fork("dd_pipeline: quality scan (overlapped)") {
       TextAnalysis.txQuality(s, d)
         .select(col("doc_id"), col("quality_score"))
         .localCheckpoint()
@@ -2230,21 +2132,19 @@ object Dedup {
     // CC labeling and the authority power iteration are independent
     // consumers of the checkpointed graph — overlapped (their heavy
     // work — routing counts, collects, per-round jobs — runs inside
-    // the futures; the returned frames are cheap reads over
+    // the forks; the returned frames are cheap reads over
     // checkpoints/broadcasts)
-    val labelsF = Future {
-      s.sparkContext.setJobDescription("dd_pipeline: CC labels (overlapped)")
+    val labelsF = st.fork("dd_pipeline: CC labels (overlapped)") {
       connectedComponents(pairs, materialized = true)
         .select(col("node").as("doc_id"), col("label").as("cluster_id"))
     }
-    val rankF = Future {
-      s.sparkContext.setJobDescription("dd_pipeline: authority rank (overlapped)")
+    val rankF = st.fork("dd_pipeline: authority rank (overlapped)") {
       graphRankScores(survivors, pairs)
         .select(col("doc_id"), col("score_e9").as("authority_e9"))
     }
-    val labels = Await.result(labelsF, Duration.Inf)
-    val rank = Await.result(rankF, Duration.Inf)
-    val quality = Await.result(qualityF, Duration.Inf)
+    val labels = labelsF.join
+    val rank = rankF.join
+    val quality = qualityF.join
     val w = Window.partitionBy(col("cluster_id"))
       .orderBy(col("quality_score").desc, col("doc_id"))
     // canonical + split computed on the SURVIVOR level (one row per
@@ -2270,7 +2170,6 @@ object Dedup {
         (col("is_can") && col("doc_id") === col("keeper_id")).as("is_canonical"),
         col("authority_e9"), col("split"))
       .orderBy(col("doc_id"))
-    } finally pool.shutdown() // futures are awaited above; idle threads die
   }
 
   /** The dd_graph_rank oracle: the same five integer power iterations,
@@ -2388,7 +2287,7 @@ object Dedup {
     * tables. dd_cluster's oracle computes connected components from
     * the dumped pair graph with a recursive CTE — a genuinely
     * independent algorithm (transitive closure) from the Spark side's
-    * pointer-jumping label propagation.
+    * union-find / large-star-small-star routes.
     */
   /** The recursive-CTE connected-components block shared by every
     * cluster-derived oracle (transitive closure over the dumped pair

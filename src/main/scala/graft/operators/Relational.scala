@@ -1595,25 +1595,10 @@ object Relational {
       return out.result().toDF("id", "cost_c", "qty_l")
         .orderBy(col("cost_c"), col("id"))
     }
-    // exact refine, two-pass: range partition on cost_c, per-partition
-    // maxima to the driver, exclusive prefix back as a broadcast
-    val sp = survivors.repartitionByRange(col("cost_c"))
-      .withColumn("__pid", spark_partition_id())
-      .localCheckpoint()
-    val pidMax = sp.groupBy(col("__pid")).agg(max(col("qty_l")).as("pmax"))
-      .collect().map(r => (r.getInt(0), r.getLong(1))).sortBy(_._1)
-    val prefix = pidMax.scanLeft((Int.MinValue, Option.empty[Long])) {
-      case ((_, run), (pid, pmax)) =>
-        (pid, Some(run.fold(pmax)(math.max(_, pmax))))
-    }.sliding(2).collect { case Array((_, run), (pid, _)) =>
-      (pid, run.map(Long.box).orNull)
-    }.toSeq
-    val prefixDf = broadcast(prefix.toDF("__pid", "prefix_max"))
-    val wLocal = Window.partitionBy(col("__pid")).orderBy(col("cost_c"))
-      .rangeBetween(Window.unboundedPreceding, -1)
-    sp.join(prefixDf, Seq("__pid"))
-      .withColumn("prev_max",
-        greatest(max(col("qty_l")).over(wLocal), col("prefix_max")))
+    // exact refine, distributed: the shared two-pass prefix scan
+    // (range partition on cost_c, per-partition maxima to the driver,
+    // exclusive prefix back as a broadcast)
+    graft.plans.PrefixScan.exclusiveMaxByKey(survivors, "cost_c", "qty_l")
       .filter(col("prev_max").isNull || col("prev_max") <= col("qty_l"))
       .select(col("id"), col("cost_c"), col("qty_l"))
       .orderBy(col("cost_c"), col("id"))

@@ -148,7 +148,6 @@ object StreamingTwins {
 
   val stLatenessAudit: Q = (s, d) => {
     import s.implicits._
-    val wPart = Window.partitionBy(col("src_part")).orderBy(col("event_id"))
     val arr = Tables.events(s, d)
       .withColumn("src_part", col("user_id") % 8)
       .withColumn("ts_us", unix_micros(col("ts")))

@@ -20,9 +20,8 @@ import org.apache.spark.sql.functions._
   *     task; the RANGE frame excludes equal keys exactly like the
   *     single-partition original.
   *
-  * Same shape as q52_skyline's distributed refine (kept inline there —
-  * its driver route fuses the skyline filter); first shared consumer
-  * is st_lateness_audit's watermark table.
+  * Consumers: q52_skyline's distributed refine and st_lateness_audit's
+  * watermark table.
   */
 object PrefixScan {
   /** `df` plus a `prev_max` LongType column. `valCol` must be a Long

@@ -4,6 +4,7 @@ import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode}
 import java.sql.Timestamp
+import graft.Stages
 
 /** Genuine Structured Streaming pipelines over the events schema.
   *
@@ -450,33 +451,25 @@ object EventStreams extends Serializable {
               .agg(first(col("est_jaccard")).as("est_jaccard"))
           else vsNew
         // pairs write and index append write disjoint artifacts off the
-        // same checkpointed banded frame — overlapped (guide §2.6).
-        // Safe even if the append commits while the pairs job is
-        // running and its index scan re-lists the table: the probe
-        // would then see this batch's own rows, but those collisions
-        // are exactly vsNew's pairs, and the (doc_a, doc_b) collapse
-        // absorbs them — the same argument that already covers a
-        // crashed replay re-probing rows the failed attempt indexed.
-        // Marker still last, after both complete.
-        import scala.concurrent.{Await, ExecutionContext, Future}
-        import scala.concurrent.duration.Duration
-        val dpool = java.util.concurrent.Executors.newFixedThreadPool(2)
-        implicit val ec: ExecutionContext =
-          ExecutionContext.fromExecutorService(dpool)
-        try {
-          val pairsF = Future {
-            spark.sparkContext.setJobDescription("dedup batch: pairs (overlapped)")
+        // same checkpointed banded frame, so they overlap. Safe even if
+        // the append commits while the pairs job is running and its
+        // index scan re-lists the table: the probe would then see this
+        // batch's own rows, but those collisions are exactly vsNew's
+        // pairs, and the (doc_a, doc_b) collapse absorbs them — the same
+        // argument that already covers a crashed replay re-probing rows
+        // the failed attempt indexed. Marker still last, after both
+        // complete. Per-stage time: the traced etl_stream run's
+        // EventStreams.stage.dedup_s.
+        Stages.scope(spark) { s =>
+          s.fork("dedup batch: pairs (overlapped)") {
             newPairs.write.mode("overwrite").parquet(batchDir.toString)
           }
-          val appendF = Future {
-            spark.sparkContext.setJobDescription("dedup batch: index append (overlapped)")
+          s.fork("dedup batch: index append (overlapped)") {
             banded.write.mode("append").format("parquet")
               .bucketBy(nBuckets, "band_key")
               .saveAsTable(indexTable)
           }
-          Await.result(pairsF, Duration.Inf)
-          Await.result(appendF, Duration.Inf)
-        } finally { dpool.shutdown() }
+        }
         fs.create(marker, true).close()
       }
     }
@@ -578,27 +571,20 @@ object EventStreams extends Serializable {
           } else
             Seq.empty[(Long, Long, Long, Double)]
               .toDF("query_id", "rank", "neighbor_id", "sim")
-        // top-k write and index append overlapped (guide §2.6): both
-        // read only the checkpointed assigned frame. Safe even if the
-        // append commits while the result job is running and its index
-        // scan re-lists the table — the probe filters
-        // batch_id =!= batchId, which excludes exactly the rows the
-        // concurrent append adds. The idempotent-append probe (a
-        // crashed attempt that already appended must not append a
-        // second copy) stays strictly BEFORE the append on its own
-        // thread. Marker still last, after both complete.
-        import scala.concurrent.{Await, ExecutionContext, Future}
-        import scala.concurrent.duration.Duration
-        val apool = java.util.concurrent.Executors.newFixedThreadPool(2)
-        implicit val ec: ExecutionContext =
-          ExecutionContext.fromExecutorService(apool)
-        try {
-          val resultF = Future {
-            spark.sparkContext.setJobDescription("ann batch: topk (overlapped)")
+        // top-k write and index append overlap: both read only the
+        // checkpointed assigned frame. Safe even if the append commits
+        // while the result job is running and its index scan re-lists
+        // the table — the probe filters batch_id =!= batchId, which
+        // excludes exactly the rows the concurrent append adds. The
+        // idempotent-append probe (a crashed attempt that already
+        // appended must not append a second copy) stays strictly BEFORE
+        // the append in its own fork. Marker still last, after both
+        // complete. Per-stage time: EventStreams.stage.ann_s.
+        Stages.scope(spark) { s =>
+          s.fork("ann batch: topk (overlapped)") {
             result.write.mode("overwrite").parquet(batchDir.toString)
           }
-          val appendF = Future {
-            spark.sparkContext.setJobDescription("ann batch: index append (overlapped)")
+          s.fork("ann batch: index append (overlapped)") {
             val alreadyAppended = spark.catalog.tableExists(indexTable) &&
               !spark.table(indexTable).filter(col("batch_id") === batchId).isEmpty
             if (!alreadyAppended)
@@ -606,9 +592,7 @@ object EventStreams extends Serializable {
                 .bucketBy(nBuckets, "cent_id")
                 .saveAsTable(indexTable)
           }
-          Await.result(resultF, Duration.Inf)
-          Await.result(appendF, Duration.Inf)
-        } finally { apool.shutdown() }
+        }
         fs.create(marker, true).close()
       }
     }
@@ -737,8 +721,7 @@ object EventStreams extends Serializable {
         .partitionBy(col("source")).orderBy(col("doc_id"))
         .rowsBetween(org.apache.spark.sql.expressions.Window.unboundedPreceding,
           org.apache.spark.sql.expressions.Window.currentRow)
-      // OVERLAPPED INDEPENDENT STAGES (round 18, guide §2.6 — the
-      // statement-batch precedent): the manifest write, the
+      // OVERLAPPED INDEPENDENT STAGES: the manifest write, the
       // cursor-advance (collect + sidecar rewrite) and the keeper
       // append all read only the checkpointed labeled frame and write
       // disjoint artifacts, so nothing orders them within a batch.
@@ -746,14 +729,8 @@ object EventStreams extends Serializable {
       // and cursor file are whole rewrites, a crashed attempt's keeper
       // append lands in stored_keeper (see the scaladoc contract), and
       // the _APPLIED marker still goes last, after all three complete.
-      import scala.concurrent.{Await, ExecutionContext, Future}
-      import scala.concurrent.duration.Duration
-      val cpool = java.util.concurrent.Executors.newFixedThreadPool(3)
-      implicit val ec: ExecutionContext =
-        ExecutionContext.fromExecutorService(cpool)
-      try {
-        val manifestF = Future {
-          spark.sparkContext.setJobDescription("curation batch: manifest (overlapped)")
+      Stages.scope(spark) { s =>
+        s.fork("curation batch: manifest (overlapped)") {
           labeled
             .withColumn("n_toks", when(col("drop_reason").isNull, col("toks")))
             .withColumn("cum_toks",
@@ -768,8 +745,7 @@ object EventStreams extends Serializable {
         }
         // advance the cursor: previous totals + this batch's kept
         // tokens, rewritten whole (replay-safe), sorted for determinism
-        val cursorF = Future {
-          spark.sparkContext.setJobDescription("curation batch: cursor advance (overlapped)")
+        s.fork("curation batch: cursor advance (overlapped)") {
           val batchTotals = labeled.filter(col("drop_reason").isNull)
             .groupBy(col("source")).agg(sum(col("toks")).as("t"))
             .collect().map(r => r.getString(0) -> r.getLong(1)).toMap
@@ -791,8 +767,7 @@ object EventStreams extends Serializable {
         // keeper table, so the append never reads the table it writes
         // (the per-frame checkpoint this filter used to carry is gone
         // — one job per batch saved).
-        val keeperF = Future {
-          spark.sparkContext.setJobDescription("curation batch: keeper append (overlapped)")
+        s.fork("curation batch: keeper append (overlapped)") {
           labeled
             .filter(col("q_ok") && col("stored_keeper").isNull &&
               col("doc_id") === col("batch_keeper"))
@@ -802,10 +777,7 @@ object EventStreams extends Serializable {
             .bucketBy(nBuckets, "text_hash")
             .saveAsTable(keeperTable)
         }
-        Await.result(manifestF, Duration.Inf)
-        Await.result(cursorF, Duration.Inf)
-        Await.result(keeperF, Duration.Inf)
-      } finally { cpool.shutdown() }
+      }
       fs.create(marker, true).close()
     }
   }
@@ -887,58 +859,35 @@ object EventStreams extends Serializable {
         extra = Seq("content"))
       .withColumn("doc_id", xxhash64(col("file_name")))
       .localCheckpoint()
-    // OVERLAPPED INDEPENDENT STAGES (round 18, guide §2.6 — the
-    // dd_pipeline precedent): the three stages write disjoint
-    // artifacts (manifest dir, band index + pairs dir, IVF index +
-    // topk dir) and all read the one checkpointed batch frame, so
-    // nothing orders them. Measured split (Profile --stmt-stages,
-    // warm): dedup 3.7 s dominates over manifest 0.7 + ann 1.0 — the
-    // two small stages back-fill the dedup stage's tail instead of
-    // serializing after it. Submitted FIFO with dedup first so the
-    // dominant stage keeps resource priority; per-stage replay
-    // contracts (_APPLIED markers, whole-dir rewrites) are unchanged,
-    // and a failure in any stage rethrows through Await before the
-    // batch is considered applied.
-    import scala.concurrent.{Await, ExecutionContext, Future}
-    import scala.concurrent.duration.Duration
-    // Force the operator singletons' init on THIS thread before
-    // forking: Dedup/Similarity/TextAnalysis reference each other in
-    // their object initializers, which is fine single-threaded (JVM
-    // class init is re-entrant) but DEADLOCKS when two pool threads
-    // first-touch different members of the cycle concurrently — each
-    // blocks on the other's class-init monitor (observed hang, thread
-    // dump in OPTIMIZATION_r18.md §11).
-    locally {
-      val _ = (graft.operators.Dedup.queries.size,
-        graft.operators.Similarity.queries.size,
-        graft.operators.TextAnalysis.queries.size)
-    }
-    val pool = java.util.concurrent.Executors.newFixedThreadPool(3)
-    implicit val ec: ExecutionContext = ExecutionContext.fromExecutorService(pool)
-    try {
-      val dedupF = Future {
-        spark.sparkContext.setJobDescription("statement batch: dedup index (overlapped)")
+    // OVERLAPPED INDEPENDENT STAGES: the three stages write disjoint
+    // artifacts (manifest dir, band index + pairs dir, IVF index + topk
+    // dir) and all read the one checkpointed batch frame, so nothing
+    // orders them: each stage back-fills the others' straggler tails
+    // instead of serializing after them. The traced etl_stream run
+    // reports each batch's time per stage
+    // (EventStreams.stage.{extract,dedup,ann}_s, keyed on the job
+    // descriptions below). Per-stage replay contracts (_APPLIED
+    // markers, whole-dir rewrites) cover any completion order, and a
+    // failure in any stage reaches the caller only after the other two
+    // have finished.
+    Stages.scope(spark) { s =>
+      s.fork("statement batch: dedup index (overlapped)") {
         dedupIndexApplyBatch(
           extracted.select(col("doc_id"), col("content").as("text")),
           batchId, dedupIndexTable, pairsDir)
       }
-      val annF = Future {
-        spark.sparkContext.setJobDescription("statement batch: ann index (overlapped)")
+      s.fork("statement batch: ann index (overlapped)") {
         annIndexApplyBatch(
           extracted.select(col("doc_id").as("vec_id"),
             graft.functions.VectorFunctions
               .hashedTextEmbedding(col("content")).as("embedding")),
           batchId, centroids, annIndexTable, topkDir, nprobe, k, 8)
       }
-      val manifestF = Future {
-        spark.sparkContext.setJobDescription("statement batch: manifest write (overlapped)")
+      s.fork("statement batch: manifest write (overlapped)") {
         extracted.drop("content", "doc_id")
           .write.mode("overwrite").parquet(s"$extractedDir/batch-$batchId")
       }
-      Await.result(dedupF, Duration.Inf)
-      Await.result(annF, Duration.Inf)
-      Await.result(manifestF, Duration.Inf)
-    } finally { pool.shutdown() }
+    }
   }
 
   /** STREAMING event-rate anomaly detection — the online variant of

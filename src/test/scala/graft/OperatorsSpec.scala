@@ -8,6 +8,27 @@ import org.apache.spark.sql.functions._
   */
 class OperatorsSpec extends SparkTestBase {
 
+  /** Reference connected components: a plain driver union-find that
+    * parents the larger root under the smaller, so every node's label
+    * is its component minimum — the labeling both routes of
+    * Dedup.connectedComponents must produce.
+    */
+  private def unionFindLabels(edges: Seq[(Long, Long)]): Map[Long, Long] = {
+    val parent = scala.collection.mutable.Map.empty[Long, Long]
+    def find(x: Long): Long = {
+      val p = parent.getOrElseUpdate(x, x)
+      if (p == x) x else { val r = find(p); parent(x) = r; r }
+    }
+    edges.foreach { case (a, b) =>
+      val (ra, rb) = (find(a), find(b))
+      if (ra != rb) parent(math.max(ra, rb)) = math.min(ra, rb)
+    }
+    parent.keys.map(x => x -> find(x)).toMap
+  }
+
+  private def edgesOf(pairs: org.apache.spark.sql.DataFrame): Seq[(Long, Long)] =
+    pairs.collect().map(r => (r.getAs[Long]("doc_a"), r.getAs[Long]("doc_b"))).toSeq
+
   test("every registered query runs and has a deterministic schema") {
     SparkEntry.queries.foreach { case (name, fn) =>
       val df = fn(spark, sfDir)
@@ -406,22 +427,24 @@ class OperatorsSpec extends SparkTestBase {
     assert(rows.count(!_.getAs[Boolean]("is_canonical")) > 0)
   }
 
-  test("connectedComponents converges on a 300-hop chain (pointer jumping)") {
+  test("connectedComponents star branch converges on a 300-hop chain") {
     import spark.implicits._
     // a path graph of diameter 300 — plain one-hop propagation would
-    // need 300 rounds; pointer jumping must land it within the 40-round
-    // cap (log2(300) ≈ 8.2 jump rounds) or throw
+    // need 300 rounds; the router's distributed branch must land it
+    // inside its round cap or throw
     val chain = (0L until 300L).map(i => (i, i + 1))
     // plus a separate cycle and an isolated pair, shuffled ids so labels
     // aren't trivially ordered
     val cycle = Seq((1000L, 1001L), (1001L, 1002L), (1002L, 1000L))
     val pair = Seq((5000L, 4999L))
-    val pairs = (chain ++ cycle ++ pair).toDF("doc_a", "doc_b")
-    // this spec covers the standalone pointer-jumping loop (the router
-    // no longer reaches it; see the router-branch spec below)
-    val labels = operators.Dedup.connectedComponentsPointerJump(pairs)
+    val edges = chain ++ cycle ++ pair
+    // budget 0 forces the router's star branch (the driver union-find
+    // would otherwise take a graph this small)
+    val labels = operators.Dedup.connectedComponents(
+        edges.toDF("doc_a", "doc_b"), driverPathMaxEdges = 0L)
       .collect()
       .map(r => r.getAs[Long]("node") -> r.getAs[Long]("label")).toMap
+    assert(labels == unionFindLabels(edges))
     assert((0L to 300L).forall(labels(_) == 0L), "chain not fully merged")
     assert(Seq(1000L, 1001L, 1002L).forall(labels(_) == 1000L))
     assert(labels(4999L) == 4999L && labels(5000L) == 4999L)
@@ -465,34 +488,23 @@ class OperatorsSpec extends SparkTestBase {
       s"star CC edge set must be monotone non-increasing: $roundEdges")
     assert(roundEdges.last == (n + 1) + 3 - 2,
       s"fixpoint must hold exactly (nodes - components) star edges: $roundEdges")
-    // union-find ground truth
-    val parent = scala.collection.mutable.Map.empty[Long, Long]
-    def find(x: Long): Long = {
-      val p = parent.getOrElseUpdate(x, x)
-      if (p == x) x else { val r = find(p); parent(x) = r; r }
-    }
-    (chain ++ cycle).foreach { case (a, b) =>
-      val (ra, rb) = (find(a), find(b))
-      if (ra != rb) parent(math.max(ra, rb)) = math.min(ra, rb)
-    }
-    val expected = parent.keys.map(x => x -> find(x)).toMap
+    val expected = unionFindLabels(chain ++ cycle)
     assert(labels == expected,
       s"star labels diverge from union-find: ${(labels.toSet diff expected.toSet).take(5)}")
     // every chain node carries the component minimum (0 after scramble)
     assert(labels(scramble(0)) == 0L && labels(scramble(n)) == 0L)
   }
 
-  test("star CC equals the pointer-jumping fixpoint on the corpus pair graph") {
+  test("star CC equals union-find on the corpus pair graph") {
     val pairs = operators.Dedup.ddMinhashLsh(spark, sfDir)
       .select(col("doc_a"), col("doc_b"))
     def toMap(df: org.apache.spark.sql.DataFrame) = df.collect()
       .map(r => r.getAs[Long]("node") -> r.getAs[Long]("label")).toMap
     val roundEdges = scala.collection.mutable.ArrayBuffer.empty[Long]
     val star = toMap(operators.Dedup.connectedComponentsStar(pairs, roundEdges))
-    val jump = toMap(
-      operators.Dedup.connectedComponentsPointerJump(pairs))
-    assert(star == jump,
-      s"algorithms diverge: ${(star.toSet -- jump.toSet).take(3)}")
+    val expected = unionFindLabels(edgesOf(pairs))
+    assert(star == expected,
+      s"star labels diverge from union-find: ${(star.toSet -- expected.toSet).take(3)}")
     assert(star.nonEmpty)
     // on the CLIQUE-RICH near-dup pair graph the edge set genuinely
     // contracts: every k-clique of redundant pair edges collapses
@@ -508,22 +520,22 @@ class OperatorsSpec extends SparkTestBase {
       s"fixpoint must hold exactly (nodes - components) star edges: $roundEdges")
   }
 
-  test("connectedComponents routes correctly: fast path, star branch, pointer jump agree") {
+  test("connectedComponents router: fast path and star branch equal union-find") {
     val pairs = operators.Dedup.ddMinhashLsh(spark, sfDir)
       .select(col("doc_a"), col("doc_b"))
     def toMap(df: org.apache.spark.sql.DataFrame) = df.collect()
       .map(r => r.getAs[Long]("node") -> r.getAs[Long]("label")).toMap
     val fast = toMap(operators.Dedup.connectedComponents(pairs))
     // threshold 0 forces the router's DISTRIBUTED branch — the
-    // star handoff production graphs >1M edges take; without this the
-    // routing line itself would have no coverage
+    // star handoff production graphs past the driver budget take;
+    // without this the routing line itself would have no coverage
     val routedStar = toMap(
       operators.Dedup.connectedComponents(pairs, driverPathMaxEdges = 0L))
-    val jump = toMap(operators.Dedup.connectedComponentsPointerJump(pairs))
+    val expected = unionFindLabels(edgesOf(pairs))
     assert(fast == routedStar,
       s"router branches diverge: ${(fast.toSet -- routedStar.toSet).take(3)}")
-    assert(fast == jump,
-      s"paths diverge: ${(fast.toSet -- jump.toSet).take(3)}")
+    assert(fast == expected,
+      s"router diverges from union-find: ${(fast.toSet -- expected.toSet).take(3)}")
     assert(fast.nonEmpty)
   }
 
